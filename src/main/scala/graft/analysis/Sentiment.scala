@@ -70,29 +70,32 @@ object Sentiment {
   // sets cycles the cache instead of leaking it.
   private lazy val defaultAc = AhoCorasick.twoGroups(PositiveLexicon, NegativeLexicon)
   private val acCacheMax = 64
-  private val acCache =
-    scala.collection.concurrent.TrieMap.empty[(Set[String], Set[String]), AhoCorasick]
-  // size tracked with a counter (TrieMap.size is O(n)); at capacity evict
-  // ONE arbitrary entry instead of clearing — a workload cycling 64+ live
-  // lexicon pairs degrades to one rebuild per new pair, not a full-cache
-  // rebuild every cycle. Races make the counter approximate; the bound
-  // only needs to hold within a few entries.
-  private val acCacheSize = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def acFor(pos: Set[String], neg: Set[String]): AhoCorasick =
+  private[graft] val acCache =
+    new java.util.concurrent.ConcurrentHashMap[(Set[String], Set[String]), AhoCorasick]()
+  // size tracked with a counter that moves only on an insert or removal
+  // that succeeded, so it equals the cache size once callers are quiet. At
+  // capacity, evict arbitrary entries until under the bound instead of
+  // clearing — a workload cycling 64+ live lexicon pairs degrades to one
+  // rebuild per new pair, not a full-cache rebuild every cycle — and racing
+  // callers that pick the same victim keep evicting, so the bound holds
+  // within a few entries.
+  private[graft] val acCacheSize = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] def acFor(pos: Set[String], neg: Set[String]): AhoCorasick =
     if ((pos eq PositiveLexicon) && (neg eq NegativeLexicon)) defaultAc
     else {
       val k = (pos, neg)
-      acCache.get(k) match {
-        case Some(a) => a
-        case None =>
-          if (acCacheSize.get >= acCacheMax)
-            acCache.headOption.foreach { case (ek, _) =>
-              if (acCache.remove(ek).isDefined) acCacheSize.decrementAndGet()
-            }
-          var built = false
-          val a = acCache.getOrElseUpdate(k, { built = true; AhoCorasick.twoGroups(pos, neg) })
-          if (built) acCacheSize.incrementAndGet()
-          a
+      val cached = acCache.get(k)
+      if (cached != null) cached
+      else {
+        val victims = acCache.keys()
+        while (acCacheSize.get >= acCacheMax && victims.hasMoreElements)
+          if (acCache.remove(victims.nextElement()) != null) acCacheSize.decrementAndGet()
+        // build first, then insert: two threads may both build, but only
+        // the one whose insert lands counts it
+        val built = AhoCorasick.twoGroups(pos, neg)
+        val raced = acCache.putIfAbsent(k, built)
+        if (raced != null) raced
+        else { acCacheSize.incrementAndGet(); built }
       }
     }
 

@@ -96,31 +96,12 @@ object Dedup {
       struct(lit(b).as("band"),
         md5(concat_ws("|", (0 until rows).map(r => col(s"mh_${b * rows + r}")): _*)).as("key"))
     }
-    // explicit fixed-width repartition on the bucket key: (a) the guard
-    // groupBy, the guard join and the pair self-join all consume this one
-    // exchange (ReusedExchange — signatures are computed once, not three
-    // times), (b) AQE cannot coalesce the quadratic pair expansion into a
-    // few tasks based on the tiny pre-join input (see ngramJaccardPairs)
-    val p = sigs.sparkSession.sessionState.conf.numShufflePartitions
     val keyed = sigs
       .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .repartition(p, col("band"), col("key"))
-    // degenerate-bucket guard: a single hot (band, key) — e.g. empty or
-    // boilerplate docs — would make the self-join below O(bucket²); skew
-    // real corpora always have. Cap is recall-vs-cost rails like maxDf;
-    // drops are observable through `obs` (Guard.observeDrops piggybacks on
-    // this aggregation).
-    val counts = Guard.observeDrops(
-      keyed.groupBy(col("band"), col("key")).count(), obs, maxBucket,
-      label = "lshCandidatePairs")
-    val small = counts.filter(col("count") <= maxBucket).select(col("band"), col("key"))
-    val guarded = keyed.join(small, Seq("band", "key"))
-    val a = guarded.as("a"); val b = guarded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.band").as("band"), col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-      .distinct()
+    Guard.cappedSelfJoin(keyed, Seq("band", "key"), Seq("doc_id"), maxBucket,
+        "lshCandidatePairs", obs, sigs.sparkSession.sessionState.conf.numShufflePartitions)
+      .select("band", "a", "b").distinct()
   }
 
   /** Exact word-shingle Jaccard for candidate pairs (the verify stage after
@@ -165,33 +146,17 @@ object Dedup {
       array_distinct(shingleCol(col("text"), shingleW)).as("sh"))
       .withColumn("setSize", size(col("sh")))
     val inv = sets.select(col("doc_id"), col("setSize"), explode(col("sh")).as("sh"))
-    // inverted-index guard: drop degenerate hub shingles. Skipped entirely
-    // when capless (one less shuffle) — the exact-oracle contract query
-    // runs capless (and `obs`, if any, reports zeros: nothing can drop).
-    val filtered =
-      if (maxDf == Int.MaxValue) inv
-      else inv.join(
-        Guard.observeDrops(inv.groupBy("sh").count(), obs, maxDf,
-            label = "ngramJaccardPairs")
-          .filter(col("count") <= maxDf).select("sh"),
-        Seq("sh"))
-    // EXPLICIT fixed-width repartition on the join key. The join inputs are
-    // tiny (one row per doc-shingle) but the join OUTPUT is quadratic in
-    // per-shingle df — AQE, which sizes partitions from the map-side input
-    // bytes, would coalesce the pre-join exchanges to a handful of
-    // partitions and run the pair expansion nearly serially. Pinning both
-    // children to the same (sh, p) layout means the planner inserts no
-    // further exchange and the expansion fans out across p tasks.
-    val parted = filtered.repartition(p, col("sh"))
-    // length filter (PPJoin-style, lossless): jaccard >= t forces
+    // inverted-index guard: `maxDf` drops degenerate hub shingles; the
+    // exact-oracle contract query runs capless. Length filter
+    // (PPJoin-style, lossless): jaccard >= t forces
     // t·max(|a|,|b|) <= min(|a|,|b|); pairs failing it never reach the
     // aggregation
-    val a = parted.select(col("sh"), col("doc_id").as("a"), col("setSize").as("sa"))
-    val b = parted.select(col("sh"), col("doc_id").as("b"), col("setSize").as("sb"))
-    a.join(b, Seq("sh")).filter(col("a") < col("b") &&
-        greatest(col("sa"), col("sb")) * threshold <= least(col("sa"), col("sb")))
+    val (sa, sb) = (col("setSize_a"), col("setSize_b"))
+    Guard.cappedSelfJoin(inv, Seq("sh"), Seq("doc_id", "setSize"), maxDf,
+        "ngramJaccardPairs", obs, p)
+      .filter(greatest(sa, sb) * threshold <= least(sa, sb))
       .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("inter"), min(col("sa")).as("sa"), min(col("sb")).as("sb"))
+      .agg(count(lit(1)).as("inter"), min(sa).as("sa"), min(sb).as("sb"))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
       .filter(col("jaccard") >= threshold)
@@ -200,22 +165,41 @@ object Dedup {
 
   // ---- SimHash -------------------------------------------------------------------
 
-  /** 64-bit SimHash over word tokens (FNV-64 token hashes, unweighted):
-    * near-dups have small Hamming distance. Pure Scala hashing (stable
-    * across JVMs), one pass per doc.
+  /** SimHash over word tokens in `limbs` 64-bit words (little-endian:
+    * limb 0 holds bits 0-63), unweighted: near-dups have small Hamming
+    * distance. Limb i votes on its own FNV-1a stream (FNV-64 prime,
+    * offset basis XOR'ed with i times the 64-bit golden-ratio constant),
+    * so limb 0 is `UrlCanon.hash64`'s stream. "Independent" here needs
+    * only per-token bit-pattern decorrelation between the streams (each
+    * signature bit is a majority vote over its own stream's bit), which a
+    * distinct basis provides — the classic multi-hash construction, no
+    * second hash family required. Pure Scala hashing (stable across
+    * JVMs), one pass per doc.
     */
-  def simhash(tokens: Seq[String]): Long = {
-    val acc = new Array[Int](64)
+  private[ops] def simhashLimbs(tokens: Seq[String], limbs: Int): Array[Long] = {
+    val acc = new Array[Int](64 * limbs)
     tokens.foreach { t =>
-      val h = graft.core.UrlCanon.hash64(t)
-      var i = 0
-      while (i < 64) { if (((h >>> i) & 1L) == 1L) acc(i) += 1 else acc(i) -= 1; i += 1 }
+      val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      var l = 0
+      while (l < limbs) {
+        var h = 0xcbf29ce484222325L ^ (l * 0x9e3779b97f4a7c15L)
+        var i = 0
+        while (i < bytes.length) { h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
+        i = 0
+        while (i < 64) { acc(64 * l + i) += (if (((h >>> i) & 1L) == 1L) 1 else -1); i += 1 }
+        l += 1
+      }
     }
-    var out = 0L
-    var i = 0
-    while (i < 64) { if (acc(i) > 0) out |= (1L << i); i += 1 }
-    out
+    Array.tabulate(limbs) { l =>
+      var out = 0L
+      var i = 0
+      while (i < 64) { if (acc(64 * l + i) > 0) out |= (1L << i); i += 1 }
+      out
+    }
   }
+
+  /** 64-bit SimHash: the one-limb `simhashLimbs`. */
+  def simhash(tokens: Seq[String]): Long = simhashLimbs(tokens, 1)(0)
   private val simhashU = udf((text: String) =>
     if (text == null) 0L else simhash(text.split(" ").toSeq))
   def simhashCol(text: Column): Column = simhashU(text)
@@ -278,69 +262,14 @@ object Dedup {
       maxBucket: Int = 10000,
       signatures: DataFrame => DataFrame = simhashFnvSigs(_),
       corpusSize: Long = -1L,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
-    val nBlocks = maxHamming + 1
-    require(nBlocks <= bits, s"maxHamming $maxHamming needs $nBlocks blocks > $bits bits")
-    val width = bits / nBlocks // first (nBlocks-1) blocks `width` bits, last takes the rest
-    Guard.warnIfUndersized("simhashDupPairs", corpusSize,
-      math.pow(2.0, width), maxBucket)
-    val sigs = signatures(docs)
-    val blocks = (0 until nBlocks).map { q =>
-      val lo = q * width
-      val w = if (q == nBlocks - 1) bits - lo else width
-      val mask = if (w == 64) -1L else (1L << w) - 1 // 1L<<64 wraps to 1 in JVM shift semantics
-      struct(lit(q).as("q"),
-        shiftrightunsigned(col("sig"), lo).bitwiseAND(lit(mask)).as("key"))
-    }
-    // same exchange-sharing + anti-coalesce repartition as lshCandidatePairs
-    val p = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val keyed = sigs.select(col("doc_id"), col("sig"), explode(array(blocks: _*)).as("bk"))
-      .select(col("doc_id"), col("sig"), col("bk.q").as("q"), col("bk.key").as("key"))
-      .repartition(p, col("q"), col("key"))
-    // capless contract runs (maxBucket = MaxValue) skip the guard count +
-    // semi-join entirely — nothing can drop, every (q, key) would pass, and
-    // the join is a pure no-op on the result (ngramJaccardPairs pattern)
-    val guarded =
-      if (maxBucket == Int.MaxValue) keyed
-      else {
-        val small = Guard.observeDrops(keyed.groupBy(col("q"), col("key")).count(),
-            obs, maxBucket, label = "simhashDupPairs")
-          .filter(col("count") <= maxBucket).select(col("q"), col("key"))
-        keyed.join(small, Seq("q", "key"))
-      }
-    val a = guarded.select(col("q"), col("key"), col("doc_id").as("a"), col("sig").as("siga"))
-    val b = guarded.select(col("q"), col("key"), col("doc_id").as("b"), col("sig").as("sigb"))
-    a.join(b, Seq("q", "key")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("siga").bitwiseXOR(col("sigb"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+      obs: Option[Guard.GuardObservation] = None): DataFrame =
+    simhashBlockPairs(signatures(docs), Seq("sig"), bits, maxHamming, maxBucket,
+      "simhashDupPairs", corpusSize, obs)
 
   // ---- 128-bit SimHash (scale path past the 64-bit keyspace ceiling) -------
 
-  /** Second independent FNV-1a stream for the 128-bit signature: same
-    * prime, offset basis XOR'ed with the 64-bit golden-ratio constant.
-    * "Independent" here needs only per-token bit-pattern decorrelation
-    * between the two streams (each signature bit is a majority vote over
-    * its own stream's bit), which a distinct basis provides — the classic
-    * multi-hash construction, no second hash family required.
-    */
-  private[ops] def hash64b(s: String): Long = {
-    var h = 0xcbf29ce484222325L ^ 0x9e3779b97f4a7c15L
-    var i = 0
-    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    while (i < bytes.length) {
-      h ^= (bytes(i) & 0xffL)
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
-
-  /** 128-bit SimHash as (hi, lo): bits 0-63 vote on the primary FNV
-    * stream (identical votes to the 64-bit `simhash` — `lo` EQUALS
-    * `simhash(tokens)`), bits 64-127 on the second stream. Doubling the
+  /** 128-bit SimHash as (hi, lo): the two-limb `simhashLimbs` — `lo`
+    * EQUALS `simhash(tokens)`, `hi` votes on the second stream. Doubling the
     * signature doubles the per-block keyspace exponent: at maxHamming=3
     * the blocks go 16→32 bits wide, lifting the average-bucket recall
     * ceiling from ~maxBucket·2^16 (~650M docs at the 10k cap) to
@@ -348,19 +277,8 @@ object Dedup {
     * fundamentally cannot reach (see simhashDupPairs scaladoc).
     */
   def simhash128(tokens: Seq[String]): (Long, Long) = {
-    val acc = new Array[Int](128)
-    tokens.foreach { t =>
-      val h1 = graft.core.UrlCanon.hash64(t)
-      val h2 = hash64b(t)
-      var i = 0
-      while (i < 64) { if (((h1 >>> i) & 1L) == 1L) acc(i) += 1 else acc(i) -= 1; i += 1 }
-      while (i < 128) { if (((h2 >>> (i - 64)) & 1L) == 1L) acc(i) += 1 else acc(i) -= 1; i += 1 }
-    }
-    var lo = 0L; var hi = 0L
-    var i = 0
-    while (i < 64) { if (acc(i) > 0) lo |= (1L << i); i += 1 }
-    while (i < 128) { if (acc(i) > 0) hi |= (1L << (i - 64)); i += 1 }
-    (hi, lo)
+    val l = simhashLimbs(tokens, 2)
+    (l(1), l(0))
   }
   private val simhash128U = udf((text: String) =>
     if (text == null) (0L, 0L) else simhash128(text.split(" ").toSeq))
@@ -372,26 +290,8 @@ object Dedup {
     docs.select(col("doc_id"), simhash128U(col("text")).as("s"))
       .select(col("doc_id"), col("s._1").as("sig_hi"), col("s._2").as("sig_lo"))
 
-  private def mask64(n: Int): Long = if (n >= 64) -1L else (1L << n) - 1
-
-  /** Bits [start, start+w) of the 128-bit value (hi«64)|lo, as a long. */
-  private def bits128(hi: Column, lo: Column, start: Int, w: Int): Column = {
-    require(w >= 1 && w <= 64 && start >= 0 && start + w <= 128,
-      s"bad 128-bit slice [$start, ${start + w})")
-    if (start >= 64)
-      shiftrightunsigned(hi, start - 64).bitwiseAND(lit(mask64(w)))
-    else if (start + w <= 64)
-      shiftrightunsigned(lo, start).bitwiseAND(lit(mask64(w)))
-    else { // slice straddles the hi/lo boundary
-      val loBits = 64 - start
-      shiftrightunsigned(lo, start).bitwiseOR(
-        shiftleft(hi.bitwiseAND(lit(mask64(w - loBits))), loBits))
-    }
-  }
-
-  /** 128-bit SimHash near-dup pairs — same pigeonhole blocking, guard and
-    * popcount verify as `simhashDupPairs`, over (sig_hi, sig_lo)
-    * signatures. Hamming is measured on the 128-bit signature, so the
+  /** 128-bit SimHash near-dup pairs — `simhashDupPairs` over the two limbs
+    * (sig_lo, sig_hi). Hamming is measured on the 128-bit signature, so the
     * pair set is not bit-identical to the 64-bit operator's (a different
     * signature is the point); the planted-dup recall contract is the same
     * and is pinned by OpsSpec. Requires maxHamming ≥ 1 (one block cannot
@@ -401,45 +301,44 @@ object Dedup {
       maxBucket: Int = 10000,
       signatures: DataFrame => DataFrame = simhashFnv128Sigs(_),
       corpusSize: Long = -1L,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
-    val bits = 128
+      obs: Option[Guard.GuardObservation] = None): DataFrame =
+    simhashBlockPairs(signatures(docs), Seq("sig_lo", "sig_hi"), 128, maxHamming,
+      maxBucket, "simhashDupPairs128", corpusSize, obs)
+
+  /** Bits [start, start+w) of the little-endian multi-limb value, as a long. */
+  private[graft] def limbSlice(limbs: Seq[Column], start: Int, w: Int): Column = {
+    val (l, lo) = (start / 64, start % 64)
+    val low = shiftrightunsigned(limbs(l), lo)
+    val v = if (lo + w <= 64) low else low.bitwiseOR(shiftleft(limbs(l + 1), 64 - lo))
+    v.bitwiseAND(lit(if (w == 64) -1L else (1L << w) - 1)) // 1L<<64 wraps to 1
+  }
+
+  /** The shared SimHash blocking over `sigs` = (doc_id, limbs...):
+    * `maxHamming + 1` pigeonhole blocks over the `bits` low bits of the
+    * little-endian `limbs` signature columns, the capped bucket self-join
+    * on (block, key), then the popcount verify summed over the limbs.
+    */
+  private def simhashBlockPairs(sigs: DataFrame, limbs: Seq[String], bits: Int,
+      maxHamming: Int, maxBucket: Int, label: String, corpusSize: Long,
+      obs: Option[Guard.GuardObservation]): DataFrame = {
     val nBlocks = maxHamming + 1
-    require(nBlocks >= 2 && nBlocks <= bits,
-      s"simhashDupPairs128 needs 1 <= maxHamming <= ${bits - 1}, got $maxHamming")
-    val width = bits / nBlocks
-    Guard.warnIfUndersized("simhashDupPairs128", corpusSize,
-      math.pow(2.0, width), maxBucket)
-    val sigs = signatures(docs)
+    require(nBlocks >= 1 && nBlocks <= bits && bits - (nBlocks - 1) * (bits / nBlocks) <= 64,
+      s"$label: maxHamming $maxHamming needs $nBlocks blocks of 1-64 bits over $bits bits")
+    val width = bits / nBlocks // first (nBlocks-1) blocks `width` bits, last takes the rest
+    Guard.warnIfUndersized(label, corpusSize, math.pow(2.0, width), maxBucket)
+    val limbCols = limbs.map(col)
     val blocks = (0 until nBlocks).map { q =>
-      val loBit = q * width
-      val w = if (q == nBlocks - 1) bits - loBit else width
+      val lo = q * width
       struct(lit(q).as("q"),
-        bits128(col("sig_hi"), col("sig_lo"), loBit, math.min(w, 64)).as("key"))
+        limbSlice(limbCols, lo, if (q == nBlocks - 1) bits - lo else width).as("key"))
     }
-    // same exchange-sharing + anti-coalesce repartition as the 64-bit path
-    val p = docs.sparkSession.sessionState.conf.numShufflePartitions
     val keyed = sigs
-      .select(col("doc_id"), col("sig_hi"), col("sig_lo"), explode(array(blocks: _*)).as("bk"))
-      .select(col("doc_id"), col("sig_hi"), col("sig_lo"),
-        col("bk.q").as("q"), col("bk.key").as("key"))
-      .repartition(p, col("q"), col("key"))
-    // capless runs skip the guard tier — see simhashDupPairs
-    val guarded =
-      if (maxBucket == Int.MaxValue) keyed
-      else {
-        val small = Guard.observeDrops(keyed.groupBy(col("q"), col("key")).count(),
-            obs, maxBucket, label = "simhashDupPairs128")
-          .filter(col("count") <= maxBucket).select(col("q"), col("key"))
-        keyed.join(small, Seq("q", "key"))
-      }
-    val a = guarded.select(col("q"), col("key"), col("doc_id").as("a"),
-      col("sig_hi").as("ha"), col("sig_lo").as("la"))
-    val b = guarded.select(col("q"), col("key"), col("doc_id").as("b"),
-      col("sig_hi").as("hb"), col("sig_lo").as("lb"))
-    a.join(b, Seq("q", "key")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        (bit_count(col("ha").bitwiseXOR(col("hb"))) +
-          bit_count(col("la").bitwiseXOR(col("lb")))).as("hamming"))
+      .select(col("doc_id") +: limbCols :+ explode(array(blocks: _*)).as("bk"): _*)
+      .select(col("doc_id") +: limbCols :+ col("bk.q").as("q") :+ col("bk.key").as("key"): _*)
+    Guard.cappedSelfJoin(keyed, Seq("q", "key"), "doc_id" +: limbs, maxBucket, label, obs,
+        sigs.sparkSession.sessionState.conf.numShufflePartitions)
+      .select(col("a"), col("b"), limbs.map(l =>
+        bit_count(col(s"${l}_a").bitwiseXOR(col(s"${l}_b")))).reduce(_ + _).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
@@ -517,18 +416,11 @@ object Dedup {
       obs: Option[Guard.GuardObservation] = None): DataFrame = {
     Guard.warnIfUndersized("embeddingDupPairs", corpusSize,
       math.pow(2.0, planes), maxBucket)
-    val p = embeddings.sparkSession.sessionState.conf.numShufflePartitions
     val bucketed = Par.widen(embeddings).withColumn("bucket",
-        Similarity.signBucketCol(col("embedding"), dim, planes, seed))
-      .repartition(p, col("bucket"))
-    val small = Guard.observeDrops(bucketed.groupBy(col("bucket")).count(),
-        obs, maxBucket, label = "embeddingDupPairs")
-      .filter(col("count") <= maxBucket).select("bucket")
-    val guarded = bucketed.join(small, Seq("bucket"))
-    val a = guarded.select(col("bucket"), col("vec_id").as("a"), col("embedding").as("va"))
-    val b = guarded.select(col("bucket"), col("vec_id").as("b"), col("embedding").as("vb"))
-    a.join(b, Seq("bucket")).filter(col("a") < col("b"))
-      .withColumn("cosine", cosineCol(col("va"), col("vb")))
+      Similarity.signBucketCol(col("embedding"), dim, planes, seed))
+    Guard.cappedSelfJoin(bucketed, Seq("bucket"), Seq("vec_id", "embedding"), maxBucket,
+        "embeddingDupPairs", obs, embeddings.sparkSession.sessionState.conf.numShufflePartitions)
+      .withColumn("cosine", cosineCol(col("embedding_a"), col("embedding_b")))
       .filter(col("cosine") >= threshold)
       .select("a", "b", "cosine")
   }

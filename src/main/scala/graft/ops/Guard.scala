@@ -31,7 +31,7 @@ object Guard {
     @volatile private[ops] var attached = false
     // the observed bucket-count aggregation + its cap, kept for the
     // pruned-plan fallback below
-    @volatile private[ops] var source: Option[(DataFrame, Int, String)] = None
+    @volatile private[ops] var source: Option[(DataFrame, Int)] = None
     @volatile private var fallbackCache: Option[Map[String, Long]] = None
 
     private val zeros = Map("total_rows" -> 0L, "dropped_rows" -> 0L,
@@ -62,17 +62,12 @@ object Guard {
           m.map { case (k, v) => k -> (if (v == null) 0L else v.asInstanceOf[Long]) }
         else fallbackCache.getOrElse {
           val computed = source match {
-            case Some((counts, cap, countCol)) =>
+            case Some((counts, cap)) =>
               log.warn(s"[$label] guard metrics were pruned from the executed " +
                 "plan (empty result); recomputing the bucket-count aggregation " +
                 "from full lineage — this re-runs the operator's input scan")
-              val r = counts.agg(
-                coalesce(sum(col(countCol)), lit(0L)).as("total_rows"),
-                coalesce(sum(when(col(countCol) > cap, col(countCol)).otherwise(0L)), lit(0L))
-                  .as("dropped_rows"),
-                count(lit(1)).as("buckets"),
-                coalesce(sum(when(col(countCol) > cap, 1L).otherwise(0L)), lit(0L))
-                  .as("dropped_buckets")).head()
+              val aggs = dropAggs(cap)
+              val r = counts.agg(aggs.head, aggs.tail: _*).head()
               Map("total_rows" -> r.getLong(0), "dropped_rows" -> r.getLong(1),
                 "buckets" -> r.getLong(2), "dropped_buckets" -> r.getLong(3))
             case None => zeros
@@ -113,13 +108,59 @@ object Guard {
 
   def observation(label: String): GuardObservation = new GuardObservation(label)
 
-  private def dropAggs(countCol: String, cap: Int) = Seq(
-    coalesce(sum(col(countCol)), lit(0L)).as("total_rows"),
-    coalesce(sum(when(col(countCol) > cap, col(countCol)).otherwise(0L)), lit(0L))
+  private def dropAggs(cap: Int) = Seq(
+    coalesce(sum(col("count")), lit(0L)).as("total_rows"),
+    coalesce(sum(when(col("count") > cap, col("count")).otherwise(0L)), lit(0L))
       .as("dropped_rows"),
     count(lit(1)).as("buckets"),
-    coalesce(sum(when(col(countCol) > cap, 1L).otherwise(0L)), lit(0L))
+    coalesce(sum(when(col("count") > cap, 1L).otherwise(0L)), lit(0L))
       .as("dropped_buckets"))
+
+  /** The capped bucket self-join every dedup/ANN operator is built on.
+    * `keyed` holds one row per (bucket, member), bucket = the `keys`
+    * columns. Returns one row per pair of members sharing a bucket, with
+    * the first `payload` column as `a` < `b` and every other payload
+    * column `c` carried to both sides as `c_a` / `c_b`, next to the keys.
+    *
+    * The frame is pinned to `repartition(p, keys)`: (a) the guard
+    * semi-join and both sides of the self-join consume this one exchange
+    * (the second side is a ReusedExchange; the guard count shuffles only
+    * the column-pruned keys), and (b) AQE, which sizes partitions from the
+    * tiny pre-join input, cannot coalesce the quadratic pair expansion
+    * into a handful of tasks.
+    *
+    * Degenerate-bucket guard: a hot bucket (empty or boilerplate docs, a
+    * stopword shingle) would make the self-join O(bucket²), so buckets
+    * with more than `cap` members are dropped — recall-vs-cost rails,
+    * reported under `label` (see `observeDrops`). `cap == Int.MaxValue`
+    * (the capless oracle-contract runs) skips the guard entirely: nothing
+    * can drop, and an explicit `obs` reports zeros.
+    */
+  private[ops] def cappedSelfJoin(keyed: DataFrame, keys: Seq[String],
+      payload: Seq[String], cap: Int, label: String,
+      obs: Option[GuardObservation], p: Int): DataFrame = {
+    val keyCols = keys.map(col)
+    val parted = keyed.repartition(p, keyCols: _*)
+    val guarded =
+      if (cap == Int.MaxValue) parted
+      else parted.join(
+        observeDrops(parted.groupBy(keyCols: _*).count(), obs, cap, label)
+          .filter(col("count") <= cap).select(keyCols: _*),
+        keys)
+    val id +: rest = payload
+    def side(s: String) = guarded.select(keyCols ++
+      (col(id).as(s) +: rest.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a").join(side("b"), keys).filter(col("a") < col("b"))
+  }
+
+  /** A/B escape hatch for measuring the default-on telemetry's own cost:
+    * `-Dgraft.guard.telemetry=off` skips the CollectMetrics attach (and the
+    * listener registration) entirely. BENCH-ONLY — with it off, a recall
+    * collapse is silent again. Read per call so one JVM can interleave
+    * on/off batteries (see graft.tools.GuardAbBench).
+    */
+  private def telemetryOff: Boolean =
+    sys.props.get("graft.guard.telemetry").contains("off")
 
   /** Attach the drop metrics to the guard's bucket-count aggregation
     * (the `groupBy(bucket).count()` every guarded op already computes).
@@ -133,25 +174,15 @@ object Guard {
     * with zero caller cooperation. An explicit `obs` additionally gives
     * the caller blocking reads + the AQE-pruned-plan recompute fallback.
     */
-  /** A/B escape hatch for measuring the default-on telemetry's own cost:
-    * `-Dgraft.guard.telemetry=off` skips the CollectMetrics attach (and the
-    * listener registration) entirely. BENCH-ONLY — with it off, a recall
-    * collapse is silent again. Read per call so one JVM can interleave
-    * on/off batteries (see graft.tools.GuardAbBench).
-    */
-  private def telemetryOff: Boolean =
-    sys.props.get("graft.guard.telemetry").contains("off")
-
-  private[ops] def observeDrops(bucketCounts: DataFrame,
-      obs: Option[GuardObservation], cap: Int,
-      countCol: String = "count", label: String = "guard"): DataFrame = {
+  private def observeDrops(bucketCounts: DataFrame,
+      obs: Option[GuardObservation], cap: Int, label: String): DataFrame = {
     if (telemetryOff && obs.isEmpty) return bucketCounts
     ensureListener(bucketCounts.sparkSession)
-    val aggs = dropAggs(countCol, cap)
+    val aggs = dropAggs(cap)
     obs match {
       case Some(o) =>
         o.attached = true
-        o.source = Some((bucketCounts, cap, countCol))
+        o.source = Some((bucketCounts, cap))
         putTag(o.obs.name)
         bucketCounts.observe(o.obs, aggs.head, aggs.tail: _*)
       case None =>

@@ -217,27 +217,24 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     Guard.warnIfUndersized("bucketedNeighbors", corpusSize,
       math.pow(2.0, nPlanes), maxBucket)
-    val p = embeddings.sparkSession.sessionState.conf.numShufflePartitions
     val bucketed = Par.widen(embeddings).withColumn("bucket",
-        signBucketCol(col("embedding"), dim, nPlanes, seed))
-      .repartition(p, col("bucket"))
-    // degenerate-bucket guard (see Dedup.embeddingDupPairs): a hot bucket
-    // would make the self-join quadratic; nPlanes is the primary scale
-    // knob (see bucketedNeighborsAuto), and `obs` reports what the cap
-    // actually dropped
-    val small = Guard.observeDrops(bucketed.groupBy(col("bucket")).count(),
-        obs, maxBucket, label = "bucketedNeighbors")
-      .filter(col("count") <= maxBucket).select("bucket")
-    val guarded = bucketed.join(small, Seq("bucket"))
-    val a = guarded.select(col("bucket"), col("vec_id").as("a"), col("embedding").as("va"))
-    val b = guarded.select(col("bucket"), col("vec_id").as("b"), col("embedding").as("vb"))
-    // rank on the 6-decimal-ROUNDED cosine (ties broken by b): raw doubles
-    // rank identically in any engine only down to ulp noise — rounding
-    // first makes the top-k reproducible across engines (oracle-checkable)
-    // at no semantic cost
-    val pairs = a.join(b, Seq("bucket")).filter(col("a") =!= col("b"))
-      .withColumn("cosine", round(Dedup.cosineCol(col("va"), col("vb")), 6))
-    val w = Window.partitionBy(col("a")).orderBy(col("cosine").desc, col("b"))
+      signBucketCol(col("embedding"), dim, nPlanes, seed))
+    // nPlanes is the primary scale knob (see bucketedNeighborsAuto); the
+    // cap only rails degenerate buckets. Rank on the 6-decimal-ROUNDED
+    // cosine (ties broken by b): raw doubles rank identically in any
+    // engine only down to ulp noise — rounding first makes the top-k
+    // reproducible across engines (oracle-checkable) at no semantic cost.
+    // The cosine is computed once per a < b pair and emitted in both
+    // orientations: the UDF is bit-for-bit symmetric (IEEE products
+    // commute), so each side ranks the same value.
+    val (a, b, cos) = (col("a"), col("b"), col("cosine"))
+    val pairs = Guard.cappedSelfJoin(bucketed, Seq("bucket"), Seq("vec_id", "embedding"),
+        maxBucket, "bucketedNeighbors", obs,
+        embeddings.sparkSession.sessionState.conf.numShufflePartitions)
+      .select(a, b, round(Dedup.cosineCol(col("embedding_a"), col("embedding_b")), 6).as("cosine"))
+      .select(explode(array(struct(a, b, cos), struct(b.as("a"), a.as("b"), cos))).as("e"))
+      .select("e.*")
+    val w = Window.partitionBy(a).orderBy(cos.desc, b)
     pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select("a", "b", "cosine")
   }

@@ -106,4 +106,23 @@ class AnalysisSpec extends AnyFunSuite {
     assert(Issues.severityOf(0.3) == "medium")
     assert(Issues.severityOf(0.29) == "low")
   }
+
+  test("sentiment automaton cache: counter equals cache size after concurrent misses") {
+    // each round, 8 threads race over 96 fresh lexicon pairs (past the
+    // 64-entry bound, so evictions interleave with inserts); every pair is
+    // asked for by every thread, so most misses race another thread's build
+    (0 until 50).foreach { round =>
+      val pairs = (0 until 96).map(i => (Set(s"pos$i", s"r$round"), Set(s"neg$i")))
+      val threads = (0 until 8).map { t =>
+        new Thread(() => pairs.indices.foreach { j =>
+          val (p, n) = pairs((j + t * 7) % pairs.size)
+          Sentiment.acFor(p, n)
+        })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      val size = Sentiment.acCache.size()
+      assert(Sentiment.acCacheSize.get == size, s"round $round")
+      assert(size <= 64 + 8, s"round $round: $size entries") // bound holds within one per thread
+    }
+  }
 }

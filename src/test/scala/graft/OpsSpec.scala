@@ -366,6 +366,13 @@ class OpsSpec extends SparkSpec {
     java.nio.ByteBuffer.wrap(evil2).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .putInt(16, Int.MaxValue - 4) // huge chunk: would skip past the data chunk
     intercept[IllegalArgumentException] { Multimodal.decodeWav(evil2) }
+    // 60-byte RIFF/WAVE ending in a size-0 'fmt ' chunk: its PCM fields
+    // would be read past the end of the buffer
+    val shortFmt = java.nio.ByteBuffer.allocate(60).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    shortFmt.put("RIFF".getBytes).putInt(52).put("WAVE".getBytes)
+      .put("junk".getBytes).putInt(32).put(new Array[Byte](32))
+      .put("fmt ".getBytes).putInt(0)
+    intercept[IllegalArgumentException] { Multimodal.decodeWav(shortFmt.array()) }
     // opaque payloads: byte-histogram features from the actual bytes
     val blob = Array.tabulate[Byte](64)(i => (i * 4).toByte) // 4 bytes per nibble bin
     val bf = Multimodal.decode(MediaAsset("x.bin", "d", "binary", blob))
@@ -538,6 +545,24 @@ class OpsSpec extends SparkSpec {
     val direct64 = Dedup.simhashDupPairs(all, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(autoSmall == direct64)
+  }
+
+  test("simhash block keys: limb slices equal bit extraction, across the limb boundary too") {
+    val rnd = new scala.util.Random(7)
+    val sigs = Seq.fill(20)((rnd.nextLong(), rnd.nextLong())) :+ ((-1L, -1L))
+    // (start, width): in limb 0, in limb 1, full limbs, and straddling ones
+    // (the middle block of a 3-block 128-bit geometry is (42, 42))
+    val slices = Seq((0, 16), (48, 16), (0, 64), (64, 64), (84, 44), (63, 1),
+      (42, 42), (60, 8), (1, 64))
+    val got = sigs.toDF("lo", "hi").select(slices.map { case (s, w) =>
+      Dedup.limbSlice(Seq($"lo", $"hi"), s, w) }: _*).collect()
+    val m64 = (BigInt(1) << 64) - 1
+    sigs.zip(got).foreach { case ((lo, hi), row) =>
+      val v = ((BigInt(hi) & m64) << 64) | (BigInt(lo) & m64)
+      slices.zipWithIndex.foreach { case ((s, w), i) =>
+        assert(row.getLong(i) == ((v >> s) & ((BigInt(1) << w) - 1)).toLong, s"[$s, ${s + w})")
+      }
+    }
   }
 
   test("undersized geometry fails loudly; auto-sized planes keep recall") {

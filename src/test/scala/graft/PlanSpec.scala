@@ -122,4 +122,57 @@ class PlanSpec extends SparkSpec {
     val plan = executed(df.select(analysis.Sentiment.bodyCol.as("body")))
     assert(!plan.toLowerCase.contains("batchevalpython") && !plan.contains("ScalaUDF"), plan)
   }
+
+  test("dedup family: exchanges and guard drops per operator after an action") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    object H extends AdaptiveSparkPlanHelper
+    import scala.jdk.CollectionConverters._
+    // private copies of the two input tables: other suites cache the shared
+    // sf0.001 paths, and a cached scan changes which exchanges get reused
+    val dir = java.nio.file.Paths.get(tempDir("graft-dedupplan"))
+    Seq("documents.parquet", "embeddings.parquet").foreach { t =>
+      val src = java.nio.file.Paths.get(s"$sf/$t")
+      scala.util.Using.resource(java.nio.file.Files.walk(src)) {
+        _.iterator().asScala.foreach(f => java.nio.file.Files.copy(f,
+          dir.resolve(t).resolve(src.relativize(f).toString)))
+      }
+    }
+    // the registry configs of the dedup battery, plus the one family member
+    // no query runs (embeddingDupPairs, defaults)
+    val emb = () => ops.Dedup.embeddingDupPairs(
+      spark.read.parquet(s"$dir/embeddings.parquet"), dim = 64)
+    val cases = Seq("q29_ngram_jaccard_pairs", "q30_simhash_pairs", "q34_bucketed_neighbors",
+        "q36_minhash_lsh_pairs", "q41_simhash_engine_pairs", "q46_ngram_jaccard_engine",
+        "q48_simhash128_pairs").map(q => q -> (() => SparkEntry.queries(q)(spark, dir.toString))) :+
+      ("embeddingDupPairs" -> emb)
+    // (ShuffleExchangeExec, ReusedExchangeExec, guards as (label, total,
+    // dropped)). q46 guards after its pinned repartition, so the pair
+    // expansion always runs on that exchange (its second side reused);
+    // guarding before it let AQE drop the pin whenever the guard join
+    // turned into a broadcast join first, giving (5, 2) or (6, 1) by
+    // stage-completion order.
+    val want = Map[String, (Int, Int, Seq[(String, Long, Long)])](
+      "q29_ngram_jaccard_pairs" -> (4, 1, Nil),
+      "q30_simhash_pairs" -> (5, 1, Nil),
+      "q34_bucketed_neighbors" -> (6, 2, Seq(("bucketedNeighbors", 500L, 0L))),
+      "q36_minhash_lsh_pairs" -> (8, 2, Seq(("lshCandidatePairs", 2000L, 0L))),
+      "q41_simhash_engine_pairs" -> (4, 2, Seq(("simhashDupPairs", 2000L, 0L))),
+      "q46_ngram_jaccard_engine" -> (6, 2, Seq(("ngramJaccardPairs", 26477L, 4630L))),
+      "q48_simhash128_pairs" -> (4, 2, Seq(("simhashDupPairs128", 2000L, 0L))),
+      "embeddingDupPairs" -> (4, 2, Seq(("embeddingDupPairs", 500L, 0L))))
+    ops.Guard.drainDropLedgerDetailed() // clear anything earlier tests left behind
+    val got = cases.map { case (name, build) =>
+      val tag = s"planshape_$name"
+      val df = ops.Guard.withQueryTag(tag)(build())
+      df.collect()
+      ops.Guard.awaitLedgerQuiescent(quietMs = 1000)
+      val guards = ops.Guard.drainDropLedgerDetailed().filter(_.queryTag == tag)
+        .map(r => (r.label, r.totalRows, r.droppedRows)).sorted
+      val plan = df.queryExecution.executedPlan
+      name -> ((H.collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }.size,
+        H.collectWithSubqueries(plan) { case e: ReusedExchangeExec => e }.size, guards))
+    }.toMap
+    assert(got == want, got.toSeq.sortBy(_._1).mkString("\n"))
+  }
 }
