@@ -79,7 +79,6 @@ object Guard {
 
     def totalRows: Long = metrics("total_rows")
     def droppedRows: Long = metrics("dropped_rows")
-    def buckets: Long = metrics("buckets")
     def droppedBuckets: Long = metrics("dropped_buckets")
 
     /** Fraction of candidate-generation rows lost to the cap — the recall
@@ -89,20 +88,6 @@ object Guard {
       val m = metrics
       val t = m("total_rows")
       if (t == 0L) 0.0 else m("dropped_rows").toDouble / t
-    }
-
-    /** Log (WARN) when the run dropped more than `warnAt` of its rows;
-      * returns the fraction so callers can thread it into their own
-      * accounting. The message names the knob to grow.
-      */
-    def logIfLossy(warnAt: Double = 0.0): Double = {
-      val f = droppedFraction
-      if (f > warnAt)
-        log.warn(f"[$label] recall guard dropped $f%.1f%% of candidate rows " +
-          f"(${droppedRows} of ${totalRows} rows in ${droppedBuckets} of " +
-          f"${buckets} buckets) — grow the bucket keyspace (planes/blocks) " +
-          f"or the cap for this corpus size")
-      f
     }
   }
 

@@ -268,15 +268,14 @@ final class Crawler(
     }.getOrElse(spark.emptyDataset[Candidate])
   }
 
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
+  private val stageLog = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+  /** (label, wall seconds) of every completed `timed` block, in run order. */
+  def stageSeconds: Seq[(String, Double)] = stageLog.toSeq
   private def timed[T](label: String)(body: => T): T = {
-    if (!timing) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[graft-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
+    val t0 = System.nanoTime()
+    val r = body
+    stageLog += ((label, (System.nanoTime() - t0) / 1e9))
+    r
   }
 
   /** One crawl round; returns (next round's candidates, their count). */

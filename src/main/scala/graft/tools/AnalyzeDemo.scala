@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.analysis.GameAnalyzer
 import graft.snapshot.SnapshotStore
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end drive of the analysis layer: read a committed crawl store,
   * run the full GameAnalyzer pipeline (sentiment → keywords → clustering →
@@ -14,14 +13,7 @@ object AnalyzeDemo {
   def main(args: Array[String]): Unit = {
     val storeDir = args(0)
     val gameId = args.lift(1).getOrElse("lostark")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-analyze-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession(8)
 
     val docs = new SnapshotStore(storeDir).read(spark, "docs")
       .getOrElse(sys.error(s"no committed docs in $storeDir"))

@@ -1,79 +1,135 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
-/** Guide §1.4 isolation bench (SEPARATE from the frozen driver Bench):
-  * times each named SparkEntry query with the noop sink (computes every
-  * column of every row, discards the result — no sink cost, no count-only
-  * column pruning) and can dump `.explain("formatted")` per query for the
-  * committed plan evidence (plans/r07/).
+/** The profiling entry point at sf0.1 and Bench scale (separate from the
+  * frozen driver Bench). Every target runs `--reps` times:
+  *  - a SparkEntry query name, or `all` (the default): timed with the
+  *    noop sink (computes every column of every row, discards the result —
+  *    no sink cost, no count-only column pruning), or with `count()` under
+  *    `--count`; `--plans DIR` writes each query's `.explain("formatted")`
+  *    to DIR/<name>.txt (the committed plan evidence, plans/r07/);
+  *  - `crawl`: Bench's crawl (SPARK_GRAFT_BENCH_SEEDS seeds, default
+  *    6250 × cpus, 2 rounds), printing urls/s and the Crawler's
+  *    `stageSeconds`.
   *
   * Usage:
-  *   sbt "runMain graft.tools.BenchExtra [q29_... q46_... | all] [--plans DIR] [--reps N]"
+  *   sbt "runMain graft.tools.BenchExtra [q29_... q46_... | all | crawl] [--count] [--plans DIR] [--reps N]"
   *
   * Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_CPUS (local[N]).
   */
 object BenchExtra {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val plansDir = args.sliding(2).collectFirst { case Array("--plans", d) => d }
-    val reps = args.sliding(2).collectFirst { case Array("--reps", n) => n.toInt }.getOrElse(1)
-    val names0 = args.filterNot(_.startsWith("--"))
-      .filterNot(a => args.sliding(2).exists { case Array(f, v) => f.startsWith("--") && v == a; case _ => false })
-    val names =
-      if (names0.isEmpty || names0.contains("all")) graft.SparkEntry.queries.keys.toSeq.sorted
-      else names0.toSeq
+  private val Crawl = "crawl"
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  final case class Args(targets: Seq[String], plansDir: Option[String] = None,
+      reps: Int = 1, count: Boolean = false)
 
-    // session warm-up, mirroring Bench (JIT + codegen + parquet footers)
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    for (indexed <- Seq("q33_lsh_topk", "q44_ivf_topk"))
-      try graft.SparkEntry.queries(indexed)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-
-    val useCount = args.contains("--count")
-    def noop(df: DataFrame): Unit =
-      if (useCount) { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
-
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      plansDir.foreach { dir =>
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        val p = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.createDirectories(p)
-        java.nio.file.Files.write(p.resolve(s"$name.txt"),
-          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        spark.sparkContext.setJobDescription(s"benchextra:$name")
-        graft.ops.Guard.withQueryTag(name) {
-          try noop(fn(spark, sfDir)) catch { case e: Throwable =>
-            System.err.println(s"[benchextra] $name FAILED: ${e.getMessage}") }
-        }
-        spark.sparkContext.setJobDescription(null)
-        (System.nanoTime() - t0) / 1e9
-      }
-      out(name) = times
-      println(f"[benchextra] $name: ${times.map(t => f"$t%.3f").mkString(", ")} s")
+  /** `--plans` and `--reps` take a value, `--count` does not; every other
+    * argument is a target. `all`, or no target, stands for every query.
+    */
+  def parse(args: Seq[String]): Args = {
+    val queries = graft.SparkEntry.queries.keys.toSeq.sorted
+    @annotation.tailrec
+    def go(rest: List[String], acc: Args): Args = rest match {
+      case "--plans" :: dir :: t => go(t, acc.copy(plansDir = Some(dir)))
+      case "--reps" :: n :: t => go(t, acc.copy(reps = n.toInt))
+      case "--count" :: t => go(t, acc.copy(count = true))
+      case f :: _ if f.startsWith("--") => throw new IllegalArgumentException(s"bad flag: $f")
+      case "all" :: t => go(t, acc.copy(targets = acc.targets ++ queries))
+      case name :: t =>
+        require(name == Crawl || queries.contains(name), s"unknown target: $name")
+        go(t, acc.copy(targets = acc.targets :+ name))
+      case Nil => acc
     }
-    val total = out.values.map(_.min).sum
-    println(f"[benchextra] total(min-of-reps): $total%.2f s over ${out.size} queries")
+    val a = go(args.toList, Args(Vector.empty))
+    if (a.targets.isEmpty) a.copy(targets = queries) else a
+  }
+
+  /** Sum of each query's fastest rep, and the queries left out of it
+    * because a rep failed (None).
+    */
+  def minOfRepsTotal(times: Seq[(String, Seq[Option[Double]])]): (Double, Seq[String]) = {
+    val (failed, ok) = times.partition(_._2.exists(_.isEmpty))
+    (ok.map(_._2.flatten.min).sum, failed.map(_._1))
+  }
+
+  def main(argv: Array[String]): Unit = {
+    val args = parse(argv.toSeq)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = ToolSession(cpus)
+
+    if (args.targets.exists(_ != Crawl)) {
+      // session warm-up, mirroring Bench (JIT + codegen + parquet footers)
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      for (indexed <- Seq("q33_lsh_topk", "q44_ivf_topk"))
+        try graft.SparkEntry.queries(indexed)(spark, sfDir).count()
+        catch { case NonFatal(_) => () }
+    }
+
+    val out = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Option[Double]]]
+    args.targets.foreach {
+      case Crawl => crawl(spark, cpus, args.reps)
+      case name =>
+        val times = timeQuery(spark, sfDir, name, args)
+        out(name) = times
+        println(s"[benchextra] $name: ${times.map(_.fold("FAILED")(t => f"$t%.3f")).mkString(", ")} s")
+    }
+    if (out.nonEmpty) {
+      val (total, failed) = minOfRepsTotal(out.toSeq)
+      println(f"[benchextra] total(min-of-reps): $total%.2f s over ${out.size - failed.size} queries" +
+        (if (failed.isEmpty) "" else s"; FAILED: ${failed.mkString(" ")}"))
+    }
     spark.stop()
+  }
+
+  private def timeQuery(spark: SparkSession, sfDir: String, name: String,
+      args: Args): Seq[Option[Double]] = {
+    val fn = graft.SparkEntry.queries(name)
+    args.plansDir.foreach { dir =>
+      val plan = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val p = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.createDirectories(p)
+      java.nio.file.Files.write(p.resolve(s"$name.txt"),
+        plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    def run(df: DataFrame): Unit =
+      if (args.count) { df.count(); () }
+      else df.write.format("noop").mode("overwrite").save()
+    (1 to args.reps).map { _ =>
+      val t0 = System.nanoTime()
+      spark.sparkContext.setJobDescription(s"benchextra:$name")
+      val ok = graft.ops.Guard.withQueryTag(name) {
+        try { run(fn(spark, sfDir)); true } catch { case NonFatal(e) =>
+          System.err.println(s"[benchextra] $name FAILED: ${e.getMessage}"); false }
+      }
+      spark.sparkContext.setJobDescription(null)
+      Option.when(ok)((System.nanoTime() - t0) / 1e9)
+    }
+  }
+
+  /** Bench's crawl (same seeds and config), once per rep. */
+  private def crawl(spark: SparkSession, cpus: Int, reps: Int): Unit = {
+    import spark.implicits._
+    val nSeeds = sys.env.get("SPARK_GRAFT_BENCH_SEEDS").map(_.toLong).getOrElse(6250L * cpus)
+    val seeds = spark.range(nSeeds)
+      .map(i => graft.fixtures.Fixtures.benchSeed(i, postRange = 200000, nHosts = 1024))
+    val cfg = graft.core.CrawlConfig(maxRounds = 2, seenPartitions = cpus,
+      saltFactor = 32, bloomExpectedPerPartition = 2000000L,
+      eagerCheckpointFree = true) // single JVM, 2 rounds: eager free is safe
+    (1 to reps).foreach { rep =>
+      val store = java.nio.file.Files.createTempDirectory("graft-benchextra").toString
+      val crawler = new graft.pipeline.Crawler(spark, cfg, store)
+      val t0 = System.nanoTime()
+      crawler.run(seeds)
+      val sec = (System.nanoTime() - t0) / 1e9
+      ToolSession.deleteTree(store)
+      val urls = crawler.totalScheduled
+      println(f"[benchextra] crawl rep $rep: $urls urls in $sec%.2f s = ${urls / sec}%.0f urls/s")
+      crawler.stageSeconds.foreach { case (label, s) =>
+        println(f"[benchextra] crawl rep $rep $label: $s%.2f s") }
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.frontier.DistBloomBank
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured bloom-bank sizing point (SURVEY §7.4 item 3, BASELINE.md row):
@@ -23,15 +22,7 @@ object BloomSizing {
     val fpp = args.lift(2).map(_.toDouble).getOrElse(0.01)
     val probes = args.lift(3).map(_.toLong).getOrElse(10000000L)
     val cpus = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bloom-sizing")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession(cpus)
 
     val perFilter = keys / width
     val ins = spark.range(keys)

@@ -4,7 +4,6 @@ import graft.core.CrawlConfig
 import graft.fixtures.Fixtures
 import graft.oracle.SequentialOracle
 import graft.pipeline.Crawler
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end driveable surface for the crawl engine: run N seeds through
   * the full pipeline (canon → relevance → robots → dedup → politeness →
@@ -19,17 +18,9 @@ object CrawlDemo {
     val rounds = args.lift(1).map(_.toInt).getOrElse(2)
     val outDir = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val cores = args.lift(3).getOrElse("8")
+    val cores = args.lift(3).map(_.toInt).getOrElse(8)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-crawl-demo")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession(cores)
     import spark.implicits._
 
     val config = CrawlConfig(maxRounds = rounds, seenPartitions = 16,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Long-crawl endurance: run maxRounds ≫ collapseEvery with snapshot
   * persistence ON and record per-round wall time. A flat per-round cost
   * (normalized by frontier size) is the evidence that the seen-chain
@@ -15,7 +13,7 @@ object EnduranceBench {
   def main(args: Array[String]): Unit = {
     val nSeeds = args.lift(0).map(_.toLong).getOrElse(100000L)
     val rounds = args.lift(1).map(_.toInt).getOrElse(12)
-    val cores = args.lift(2).getOrElse("24")
+    val cores = args.lift(2).map(_.toInt).getOrElse(24)
     val collapseEvery = args.lift(3).map(_.toInt).getOrElse(4)
     // nHosts bounds the outlink URL space (outlinks stay on their host,
     // boards 0-4, posts 0-999): ~5k reachable URLs per host. Size it so
@@ -23,23 +21,14 @@ object EnduranceBench {
     // any lineage/fixed-cost growth stand out instead of hiding inside
     // ever-bigger rounds.
     val nHosts = args.lift(4).map(_.toInt).getOrElse(128)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession(cores)
     import spark.implicits._
 
     val store = java.nio.file.Files.createTempDirectory("graft-endurance").toString
     val seeds = spark.range(nSeeds)
       .map(i => graft.fixtures.Fixtures.benchSeed(i, postRange = 2000000, nHosts = nHosts))
     val cfg = graft.core.CrawlConfig(maxRounds = rounds,
-      seenPartitions = cores.toInt, saltFactor = 32,
+      seenPartitions = cores, saltFactor = 32,
       bloomExpectedPerPartition = 2000000L, collapseEvery = collapseEvery,
       persistRounds = true,
       eagerCheckpointFree = true) // single JVM: eager free is safe here
@@ -58,10 +47,7 @@ object EnduranceBench {
       // the warm-up's snapshot store is dead weight sharing the timed
       // run's filesystem (tmpfs-backed /tmp would pressure the very run
       // this warm-up stabilizes) — delete it before the timed loop
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(java.nio.file.Paths.get(warmStore))) {
-        _.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      ToolSession.deleteTree(warmStore)
     }
 
     val crawler = new graft.pipeline.Crawler(spark, cfg, store)
@@ -83,9 +69,11 @@ object EnduranceBench {
       val cum = crawler.totalScheduled
       val roundUrls = cum - prevScheduled
       prevScheduled = cum
+      val stages = crawler.stageSeconds.collect { case (l, s) if l.startsWith(s"r$round ") =>
+        "\"" + l.stripPrefix(s"r$round ") + f"\":$s%.2f" }
       recs += f"""{"round":$round,"wall_sec":$wall%.2f,"round_urls":$roundUrls,""" +
         f""""next_candidates":$n,"cum_scheduled":$cum,""" +
-        f""""urls_per_sec":${roundUrls / wall}%.0f}"""
+        f""""urls_per_sec":${roundUrls / wall}%.0f,"stage_sec":${stages.mkString("{", ",", "}")}}"""
       println(s"[endurance] ${recs.last}")
       candidates = next
       have = n > 0

@@ -15,18 +15,9 @@ import org.apache.spark.sql.SparkSession
 object GuardAbBench {
   def main(args: Array[String]): Unit = {
     val pairs = args.lift(0).map(_.toInt).getOrElse(2)
-    val cpus = args.lift(1).getOrElse("32")
+    val cpus = args.lift(1).map(_.toInt).getOrElse(32)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession(cpus)
 
     // warm-up: JIT, codegen caches, parquet footers, the stored ANN
     // indexes (all identical to graft.Bench's untimed prep)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** North-rule scaling evidence: the same crawl job at two parallelism
   * levels (local[N] and local[4N] — stands in for N vs 4N executors; no
   * real cluster exists in this sandbox, see BASELINE.md), reporting
@@ -13,12 +11,11 @@ object ScalingBench {
 
   /** Per-run stage accounting: total task time vs wall separates "work
     * inflated at high parallelism" (memory contention) from "cores idle"
-    * (tails / scheduling gaps). Enabled with GRAFT_STAGESTATS=1.
+    * (tails / scheduling gaps).
     */
   final class StageStats extends org.apache.spark.scheduler.SparkListener {
     @volatile var taskSec = 0.0
     @volatile var stageWallSec = 0.0
-    @volatile var maxTaskSec = 0.0
     override def onStageCompleted(
         sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
       val si = sc.stageInfo
@@ -92,21 +89,7 @@ object ScalingBench {
   }
 
   def runOnce(cores: Int, nSeeds: Long): (Double, Long, NoiseSampler.Report) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", (4 * cores).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill on tmpfs: the sandbox's /tmp is a single virtio disk
-      // whose concurrent-writer kernel overhead dwarfs compute (observed
-      // 70% system time at high parallelism); a real cluster spreads this
-      // across executor-local disks
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession(cores, shufflePartitions = 4 * cores)
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory(s"graft-scale-$cores").toString
     val seeds = spark.range(nSeeds)
@@ -128,8 +111,7 @@ object ScalingBench {
       saltFactor = 64, bloomExpectedPerPartition = 2000000L, persistRounds = false,
       eagerCheckpointFree = true) // single JVM, 2 rounds: eager free is safe here
     val stats = new StageStats
-    if (sys.env.get("GRAFT_STAGESTATS").contains("1"))
-      spark.sparkContext.addSparkListener(stats)
+    spark.sparkContext.addSparkListener(stats)
     // in-run noise samples: the bracketing probes cannot see a burst that
     // starts and ends inside the run — this can (see NoiseSampler)
     val sampler = new NoiseSampler()
@@ -139,9 +121,8 @@ object ScalingBench {
     val sec = (System.nanoTime() - t0) / 1e9
     val noise = sampler.stop()
     val scheduled = crawler.totalScheduled
-    if (sys.env.get("GRAFT_STAGESTATS").contains("1"))
-      println(f"[stage-stats] cores=$cores wall=$sec%.2f taskSec=${stats.taskSec}%.1f " +
-        f"stageWall=${stats.stageWallSec}%.1f cpuUtil=${stats.taskSec / (sec * cores)}%.2f")
+    println(f"[stage-stats] cores=$cores wall=$sec%.2f taskSec=${stats.taskSec}%.1f " +
+      f"stageWall=${stats.stageWallSec}%.1f cpuUtil=${stats.taskSec / (sec * cores)}%.2f")
     spark.stop()
     // a fresh builder after stop() creates a brand-new context
     org.apache.spark.sql.SparkSession.clearActiveSession()

@@ -21,6 +21,10 @@ class CrawlParitySpec extends SparkSpec {
     seenPartitions = 8,
     bloomExpectedPerPartition = 100000L)
 
+  val EveryRoundStages: Seq[String] =
+    Seq("sequencer", "host-state", "bloom-build", "commit-tables", "next-candidates")
+  val CollapseStages: Seq[String] = Seq("seen-collapse", "bank-rebuild")
+
   lazy val seeds: IndexedSeq[SeedRecord] = Fixtures.seeds(600)
   lazy val oracle: SequentialOracle.OracleResult = SequentialOracle.run(seeds, config)
 
@@ -196,7 +200,8 @@ class CrawlParitySpec extends SparkSpec {
     val seedsC = Fixtures.seeds(200)
     val oracleC = SequentialOracle.run(seedsC, cfgC)
     val dir = tempDir("graft-collapse")
-    new Crawler(spark, cfgC, dir).run(spark.createDataset(seedsC))
+    val crawler = new Crawler(spark, cfgC, dir)
+    crawler.run(spark.createDataset(seedsC))
     val store = new graft.snapshot.SnapshotStore(dir)
     val got = store.read(spark, "crawl_log").get
       .orderBy("seq").as[CrawlLogEntry].collect().toVector
@@ -204,6 +209,26 @@ class CrawlParitySpec extends SparkSpec {
     val seen = store.read(spark, "seen").get.orderBy("seq")
       .select("canonUrl").as[String].collect().toVector
     assert(seen == oracleC.seen)
+    // one stage-time entry per timed block per round; the chain first
+    // exceeds collapseEvery in round 1
+    val expected = (0 to 2).flatMap(k => EveryRoundStages.map(l => s"r$k $l")) ++
+      (1 to 2).flatMap(k => CollapseStages.map(l => s"r$k $l"))
+    val stages = crawler.stageSeconds
+    assert(stages.map(_._1).sorted == expected.sorted)
+    assert(stages.forall { case (_, s) => !s.isNaN && !s.isInfinite && s >= 0.0 }, stages)
+  }
+
+  test("every Crawler.timed call has the form and label perfbench attributes") {
+    // perfbench's CallSites finds crawl stages by this exact source text
+    val TimedRe = """timed\(s"r\$round ([a-z-]+)"\)""".r
+    import scala.jdk.CollectionConverters._
+    val calls = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/pipeline/Crawler.scala")).asScala
+      .filter(_.contains("timed(")).filterNot(_.contains("def timed"))
+    val labels = calls.map { l =>
+      TimedRe.findFirstMatchIn(l).map(_.group(1)).getOrElse(fail(s"unparseable timed call: $l"))
+    }
+    assert(labels.sorted == (EveryRoundStages ++ CollapseStages).sorted)
   }
 
   test("three-round crawl parity (deeper frontier expansion)") {
