@@ -72,7 +72,8 @@ final case class FetchParseRow(
   *       never dropped — SURVEY §7.4.3)
   *     → global sequence assignment (scalable two-pass: range partition +
   *       per-partition row_number + offset cumsum — no single-partition window)
-  *     → politeness schedule: repartition by (host, salt lane) hash,
+  *     → politeness schedule: repartition by (host, salt lane) hash into
+  *       ~1,024 frontier rows per task (Crawler.fetchPartitions),
   *       sortWithinPartitions(seq), paced per-host virtual clocks inside one
   *       mapPartitions running the RateLimiter state machine
   *       (rate_limiter.py: 3 s default / robots crawl-delay, 2^n backoff,
@@ -323,7 +324,9 @@ final class Crawler(
     // spilled columnar to disk (the snapshot write follows anyway and heap
     // eviction would trigger a full re-fetch); in bench mode (no
     // persistence) it stays memory-first.
-    val outcome = fetchParse(round, frontier,
+    val fetchP = Crawler.fetchPartitions(frontierCount,
+      spark.sparkContext.defaultParallelism, config.seenPartitions)
+    val outcome = fetchParse(round, frontier, fetchP,
       retainContent = config.persistRounds).persist(
       if (config.persistRounds) org.apache.spark.storage.StorageLevel.DISK_ONLY
       else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -506,13 +509,16 @@ final class Crawler(
     }
   }
 
-  /** Host-partitioned, virtually-paced fetch + parse (T1/T2 semantics).
-    * Emits the fetch results AND, after each partition drains, the final
-    * per-host scheduler states (retry count / suspension / virtual clock)
-    * for the round's checkpoint — exactly-once state via the atomic
-    * manifest commit.
-    */
-  /** retainContent=false (bench mode, persistRounds off): pages are still
+  /** Host-partitioned, virtually-paced fetch + parse (T1/T2 semantics)
+    * over `partitions` (host, lane) hash partitions — runRound passes
+    * [[Crawler.fetchPartitions]] of the round's frontier count. Emits the
+    * fetch results AND, after each partition drains, the final per-host
+    * scheduler states (retry count / suspension / virtual clock) for the
+    * round's checkpoint — exactly-once state via the atomic manifest
+    * commit. The partition count never changes a result: clocks are keyed
+    * by (host, lane) and each partition runs in `seq` order.
+    *
+    * retainContent=false (bench mode, persistRounds off): pages are still
     * fetched and fully parsed — the politeness state machine, status
     * accounting and outlink expansion are identical — but the parsed
     * spans/comments/title are not RETAINED in the row, because nothing
@@ -521,14 +527,8 @@ final class Crawler(
     * 16 KB pages), a memory-bandwidth cost that is pure overhead in a
     * fetch+dedup throughput measurement.
     */
-  def fetchParse(round: Int, frontier: Dataset[FrontierEntry],
+  def fetchParse(round: Int, frontier: Dataset[FrontierEntry], partitions: Int,
       retainContent: Boolean = true): Dataset[(FetchParseRow, HostState)] = {
-    // 16 partitions per core: a single wave (p == cores) lets the slowest
-    // partition set the stage's wall time; many small partitions amortize
-    // (host,lane) cost imbalance across waves (hosts differ in page weight,
-    // not just URL count). The per-host tail itself is bounded by
-    // saltFactor (a hot host's biggest lane is 1/salt of it).
-    val p = math.max(16 * spark.sparkContext.defaultParallelism, config.seenPartitions)
     val salt = config.saltFactor
     val saltCol =
       if (salt <= 1) lit(0)
@@ -546,7 +546,7 @@ final class Crawler(
       .withColumn("lane", saltCol)
       .join(broadcastIfSmall(priorState), Seq("host", "lane"), "left")
       .na.fill(Map("initRetry" -> 0, "initVt" -> 0.0, "initDraw" -> 0L)).na.fill(false, Seq("initSusp"))
-      .repartition(p, $"host", $"lane")
+      .repartition(partitions, $"host", $"lane")
       .sortWithinPartitions($"seq")
       .select($"round", $"seq", $"url", $"canonUrl", $"host", $"keyword", $"lane",
         $"initRetry", $"initSusp", $"initVt", $"initDraw")
@@ -615,25 +615,28 @@ final class Crawler(
   private def broadcastIfSmall(df: DataFrame): DataFrame =
     if (lastStateCount < broadcastStateMaxRows) broadcast(df) else df
 
-  /** Atomic snapshot commit of the round's five tables + bloom bank (all
-    * inputs already computed/cached by runRound — this is write-only).
-    * host_state is a DELTA: only the (host, lane) rows the round touched
-    * (at 10^8 hosts a full-state rewrite per round would be
-    * O(total-hosts) I/O for a fractional change); resume folds the deltas
-    * latest-round-wins (SnapshotStore.readFoldedLatest).
-    */
   /** Cap a table's write fan-out by its (estimated) row count: a round's
-    * tables otherwise inherit the fetch stage's 16-per-core partitioning,
-    * so a small round writes hundreds of near-empty files per table — the
-    * classic lake small-file problem, and a measured ~6 s per-round commit
-    * floor on this box. coalesce (no shuffle) — the commit is write-bound,
-    * not compute-bound, and the cap scales back up with round size.
+    * tables otherwise inherit the fetch stage's fan-out (up to 16 per
+    * core), so a round writes up to that many near-empty files per table —
+    * the classic lake small-file problem (measured: a ~6 s per-round
+    * commit floor at 16 files per core). coalesce (no shuffle) — the
+    * commit is write-bound, not compute-bound, and the cap scales back up
+    * with round size.
     */
   private def sizedForWrite(df: DataFrame, estRows: Long, rowsPerFile: Long): DataFrame =
     if (estRows < 0) df
     else df.coalesce(math.max(1, math.min(spark.sparkContext.defaultParallelism * 4L,
       math.ceil(estRows.toDouble / rowsPerFile).toLong).toInt))
 
+  /** Atomic snapshot commit of the round's five tables + bloom bank (all
+    * inputs already computed/cached by runRound — this is write-only).
+    * host_state is a DELTA: only the (host, lane) rows the round touched
+    * (at 10^8 hosts a full-state rewrite per round would be
+    * O(total-hosts) I/O for a fractional change); resume folds the deltas
+    * latest-round-wins (SnapshotStore.readFoldedLatest). `metrics` has one
+    * row per fetch partition that held rows, so at most the round's
+    * [[Crawler.fetchPartitions]].
+    */
   private def commitRound(round: Int, frontier: Dataset[FrontierEntry],
       results: DataFrame, roundStateDelta: DataFrame,
       nextSeq: Long, frontierCount: Long, fetchedCount: Long): Unit = {
@@ -671,6 +674,32 @@ final class Crawler(
       knownCounts = Map("seen" -> frontierCount, "crawl_log" -> frontierCount),
       metricsJson = s"""{"next_seq":$nextSeq,"frontier":$frontierCount}""",
       alsoParallel = bankSave) }
+  }
+}
+
+object Crawler {
+  /** Frontier rows per fetch task: about 0.4 s of fetch+parse at the
+    * ~2,650 pages/s one thread sustains on the synthetic fixtures.
+    */
+  val FetchRowsPerTask = 1024L
+
+  /** The fetch stage's `repartition(p, host, lane)` width for a round of
+    * `frontierRows` URLs: about [[FetchRowsPerTask]] rows per task, at
+    * least one task per core, at most `max(16 × cores, seenPartitions)`.
+    * Every frame of the round inherits this width (outcome cache,
+    * host-state merge, commit, next-candidates checkpoint, and the next
+    * round's dedup-window and bloom-probe map sides), so each partition
+    * is a task in every one of them, and a near-empty task costs its
+    * launch and task-binary deserialization and little else. At the cap —
+    * rounds of 16 × cores × FetchRowsPerTask rows and up — many small
+    * partitions amortize (host, lane) cost imbalance across waves (hosts
+    * differ in page weight, not just URL count); saltFactor bounds the
+    * per-host tail (a hot host's biggest lane is 1/salt of it).
+    */
+  def fetchPartitions(frontierRows: Long, cores: Int, seenPartitions: Int): Int = {
+    val cap = math.max(16 * cores, seenPartitions)
+    val tasks = if (frontierRows <= 0L) 0L else (frontierRows - 1) / FetchRowsPerTask + 1
+    math.min(cap.toLong, math.max(cores.toLong, tasks)).toInt
   }
 }
 

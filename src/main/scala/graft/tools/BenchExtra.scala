@@ -14,6 +14,9 @@ import scala.util.control.NonFatal
   *    6250 × cpus, 2 rounds), printing urls/s and the Crawler's
   *    `stageSeconds`.
   *
+  * Besides its `[benchextra]` text lines, every rep prints one JSON object
+  * on a line of its own: [[crawlRepJson]] / [[queryRepJson]].
+  *
   * Usage:
   *   sbt "runMain graft.tools.BenchExtra [q29_... q46_... | all | crawl] [--count] [--plans DIR] [--reps N]"
   *
@@ -54,6 +57,26 @@ object BenchExtra {
     (ok.map(_._2.flatten.min).sum, failed.map(_._1))
   }
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def jsonObject(fields: (String, Any)*): java.util.LinkedHashMap[String, Any] = {
+    val m = new java.util.LinkedHashMap[String, Any]()
+    fields.foreach { case (k, v) => m.put(k, v) }
+    m
+  }
+
+  /** One crawl rep as a JSON line: URLs scheduled, wall seconds, urls/s and
+    * the Crawler's `stageSeconds` as a {label: seconds} object.
+    */
+  def crawlRepJson(rep: Int, urls: Long, seconds: Double, stages: Seq[(String, Double)]): String =
+    mapper.writeValueAsString(jsonObject("target" -> Crawl, "rep" -> rep, "urls" -> urls,
+      "seconds" -> seconds, "urls_per_s" -> urls / seconds,
+      "stage_s" -> jsonObject(stages: _*)))
+
+  /** One query rep as a JSON line; `seconds` is null when the rep failed. */
+  def queryRepJson(name: String, rep: Int, seconds: Option[Double]): String =
+    mapper.writeValueAsString(jsonObject("target" -> name, "rep" -> rep,
+      "seconds" -> seconds.map(Double.box).orNull))
+
   def main(argv: Array[String]): Unit = {
     val args = parse(argv.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -75,6 +98,7 @@ object BenchExtra {
         val times = timeQuery(spark, sfDir, name, args)
         out(name) = times
         println(s"[benchextra] $name: ${times.map(_.fold("FAILED")(t => f"$t%.3f")).mkString(", ")} s")
+        times.zipWithIndex.foreach { case (t, i) => println(queryRepJson(name, i + 1, t)) }
     }
     if (out.nonEmpty) {
       val (total, failed) = minOfRepsTotal(out.toSeq)
@@ -130,6 +154,7 @@ object BenchExtra {
       println(f"[benchextra] crawl rep $rep: $urls urls in $sec%.2f s = ${urls / sec}%.0f urls/s")
       crawler.stageSeconds.foreach { case (label, s) =>
         println(f"[benchextra] crawl rep $rep $label: $s%.2f s") }
+      println(crawlRepJson(rep, urls, sec, crawler.stageSeconds))
     }
   }
 }

@@ -336,9 +336,68 @@ class CrawlParitySpec extends SparkSpec {
   }
 
   test("metrics committed per partition per round") {
+    import spark.implicits._
     val m = spark.read.parquet(s"$storeRoot/data/metrics/round=0", s"$storeRoot/data/metrics/round=1")
     assert(m.count() > 0)
     val fetched = m.agg(sum("fetched")).head().getLong(0)
     assert(fetched == oracle.crawlLog.count(_.status == "fetched"))
+    // every crawl_log row is counted once, in the partition that fetched it,
+    // and the partitions are those of the round's sized fetch fan-out
+    val cores = spark.sparkContext.defaultParallelism
+    for (round <- 0 to 1) {
+      val logRows = spark.read.parquet(s"$storeRoot/data/crawl_log/round=$round").count()
+      val mr = spark.read.parquet(s"$storeRoot/data/metrics/round=$round")
+      val (rows, total) = mr.agg(count(lit(1)), sum($"fetched" + $"failed"))
+        .as[(Long, Long)].head()
+      assert(total == logRows, s"round $round: metrics count $total rows, crawl_log has $logRows")
+      val fanOut = Crawler.fetchPartitions(logRows, cores, config.seenPartitions)
+      assert(rows <= fanOut, s"round $round: $rows metrics rows > fetch fan-out $fanOut")
+    }
+  }
+
+  test("fetch fan-out sizing: cores at 0 rows, monotone, capped, cap at 16 x cores x R rows") {
+    val R = Crawler.FetchRowsPerTask
+    for (cores <- Seq(1, 4, 32); seenP <- Seq(1, cores, 8 * cores, 32 * cores)) {
+      val cap = math.max(16 * cores, seenP)
+      def p(rows: Long) = Crawler.fetchPartitions(rows, cores, seenP)
+      assert(p(0L) == cores && p(-1L) == cores)
+      val rows = (0L to 40L * cores * R by R / 8) ++ Seq(Long.MaxValue / 2, Long.MaxValue)
+      val ps = rows.map(p)
+      assert(ps.zip(ps.tail).forall { case (a, b) => a <= b }, s"not monotone: cores=$cores")
+      assert(ps.forall(_ <= cap) && p(Long.MaxValue) == cap)
+      assert(p(cap.toLong * R) == cap)
+      if (seenP <= 16 * cores) {
+        assert(p(16L * cores * R) == cap)
+        assert(p((16L * cores - 1) * R) == 16 * cores - 1)
+      }
+    }
+  }
+
+  test("fetch fan-out invariance: sized and capped fan-outs give identical rows and host state") {
+    import spark.implicits._
+    // salt lanes multiply the (host, lane) keys that co-locate differently
+    val cfg = config.copy(saltFactor = 4)
+    val frontier = seeds.map(s => s -> UrlCanon.canonicalize(s.url)).distinctBy(_._2)
+      .zipWithIndex.map { case ((s, canon), i) =>
+        FrontierEntry(0, i.toLong, s.url, canon, UrlCanon.host(canon), s.keyword) }
+    val cores = spark.sparkContext.defaultParallelism
+    val sized = Crawler.fetchPartitions(frontier.size.toLong, cores, cfg.seenPartitions)
+    val cap = math.max(16 * cores, cfg.seenPartitions)
+    assert(sized < cap, "test vacuous: the frontier must size below the cap")
+    def run(p: Int) = {
+      val out = new Crawler(spark, cfg, tempDir("graft-fanout"))
+        .fetchParse(0, spark.createDataset(frontier), p).collect().toVector
+      val rows = out.flatMap(o => Option(o._1))
+      (rows.map(r => (r.round, r.seq, r.canonUrl, r.status, r.attempts, r.spans, r.outlinks))
+        .sortBy(_._2), out.flatMap(o => Option(o._2)).toSet, rows.map(_.partitionId).toSet)
+    }
+    val (rowsSized, statesSized, pidsSized) = run(sized)
+    val (rowsCap, statesCap, pidsCap) = run(cap)
+    assert(rowsSized.size == frontier.size && rowsSized.map(_._2) == frontier.map(_.seq))
+    assert(rowsSized == rowsCap)
+    assert(statesSized.nonEmpty && statesSized == statesCap)
+    assert(rowsSized.exists(_._4 == "fetched") && rowsSized.exists(_._4 != "fetched"))
+    assert(pidsSized.size <= sized && pidsCap.size > sized,
+      s"test vacuous: partitions used sized=${pidsSized.size} cap=${pidsCap.size}")
   }
 }

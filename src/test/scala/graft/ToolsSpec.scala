@@ -31,6 +31,23 @@ class ToolsSpec extends AnyFunSuite {
     assert(failed == Seq("b"))
   }
 
+  test("BenchExtra JSON lines: crawl rep with its stage map, query rep null when failed") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val crawl = mapper.readTree(BenchExtra.crawlRepJson(2, 1000L, 4.0,
+      Seq("r0 sequencer" -> 0.5, "r0 commit-tables" -> 1.25)))
+    assert(crawl.get("target").asText == "crawl" && crawl.get("rep").asInt == 2)
+    assert(crawl.get("urls").asLong == 1000L && crawl.get("seconds").asDouble == 4.0)
+    assert(crawl.get("urls_per_s").asDouble == 250.0)
+    val stages = crawl.get("stage_s")
+    assert(stages.size == 2 && stages.get("r0 sequencer").asDouble == 0.5 &&
+      stages.get("r0 commit-tables").asDouble == 1.25)
+    val ok = mapper.readTree(BenchExtra.queryRepJson("q29_ngram_jaccard_pairs", 1, Some(1.5)))
+    assert(ok.get("target").asText == "q29_ngram_jaccard_pairs" && ok.get("rep").asInt == 1)
+    assert(ok.get("seconds").asDouble == 1.5)
+    val failed = mapper.readTree(BenchExtra.queryRepJson("q\"x", 3, None))
+    assert(failed.get("target").asText == "q\"x" && failed.get("seconds").isNull)
+  }
+
   test("main code reads exactly the known env variables and system properties") {
     import scala.jdk.CollectionConverters._
     val Read = """(?:sys\.(?:env|props)|System\.(?:getenv|getProperty))\b[^"\n]*"([^"]+)"""".r
